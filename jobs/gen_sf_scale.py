@@ -14,8 +14,9 @@ Usage:  python jobs/gen_sf_scale.py [src_dir] [dst_dir] [factor]
 Default: /root/testdata/sf0.1 -> <repo>/.soak/sf1 x10
          --skew -> <repo>/.soak/skew
 
-The --skew mode writes the clustered/hot-key fixture for the
-salted-vs-unsalted benchmark (bench.py --skew): a point table where
+The --skew mode writes the clustered/hot-key fixture for the skew
+tests (tests/test_skew_fixture.py) and the salted-vs-unsalted LSH
+benchmark (bench.py --skew): a point table where
 30% of rows carry the SAME geotag (the camera-default / null-island
 pile-up every real photo corpus has — the worst hot-cell case for the
 covering shuffle join), an embedding table with one boilerplate block

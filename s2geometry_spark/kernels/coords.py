@@ -121,18 +121,8 @@ def st_to_ij(s: np.ndarray) -> np.ndarray:
     return np.clip(v, 0, LIMIT_IJ - 1).astype(np.int64)
 
 
-def ij_to_st_min(i: np.ndarray) -> np.ndarray:
-    """Minimum s/t of leaf cell i (S2Coords.cs:186-190)."""
-    return (1.0 / LIMIT_IJ) * np.asarray(i, dtype=np.float64)
-
-
 def siti_to_st(si: np.ndarray) -> np.ndarray:
     return (1.0 / MAX_SITI) * np.asarray(si, dtype=np.float64)
-
-
-def st_to_siti(s: np.ndarray) -> np.ndarray:
-    """Nearest si/ti (round-half-even, S2Coords.cs:208-215)."""
-    return np.rint(np.asarray(s, dtype=np.float64) * MAX_SITI).astype(np.int64)
 
 
 def face_siti_to_xyz(

@@ -1081,29 +1081,6 @@ SELECT key, line_id FROM (
 ) WHERE m <= CAST('{radius_chord2!r}' AS DOUBLE)"""
 
 
-def hausdorff_oracle_sql(
-    a_pts_cte: str, b_pts_cte: str, group_col: str = "grp"
-) -> str:
-    """DuckDB mirror of hausdorff_directed.  The pts CTEs must provide
-    (key, grp, x, y, z)."""
-    d2 = (
-        "((a.ux-b.ux)*(a.ux-b.ux) + (a.uy-b.uy)*(a.uy-b.uy)) "
-        "+ (a.uz-b.uz)*(a.uz-b.uz)"
-    )
-    return f"""WITH {a_pts_cte},
-{b_pts_cte},
-ua AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM apts)),
-ub AS (SELECT key, grp, x/r AS ux, y/r AS uy, z/r AS uz FROM
-       (SELECT key, grp, x, y, z, sqrt(x*x + y*y + z*z) AS r FROM bpts)),
-mins AS (
-  SELECT a.key, a.grp, MIN({d2}) AS min_d2
-  FROM ua a JOIN ub b ON a.grp = b.grp
-  GROUP BY a.key, a.grp
-)
-SELECT grp AS {group_col}, MAX(min_d2) AS hausdorff2 FROM mins GROUP BY grp"""
-
-
 def hausdorff_undirected_oracle_sql(
     a_pts_cte: str, b_pts_cte: str, group_col: str = "grp"
 ) -> str:

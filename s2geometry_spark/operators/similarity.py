@@ -32,21 +32,6 @@ _PLANE_SEED = 20260816
 CHUNK = 16  # partial-sum width: keeps each codegen'd expression small
 
 
-def _dot_terms_spark(a: str, b: str) -> str:
-    """Chunked dot product: 4 partial sums of 16 terms, combined
-    left-assoc — the SAME association tree as _dot_terms_duck, so both
-    engines produce bit-identical doubles.  (A flat 64-term chain blows
-    Spark's codegen method limit and falls back to interpreted eval.)"""
-    partials = []
-    for lo in range(0, DIM, CHUNK):
-        terms = " + ".join(
-            f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
-            for i in range(lo, lo + CHUNK)
-        )
-        partials.append(f"({terms})")
-    return " + ".join(partials)
-
-
 def _dot_terms_duck(a: str, b: str) -> str:
     partials = []
     for lo in range(0, DIM, CHUNK):
@@ -168,9 +153,9 @@ HOT_IMBALANCE_FACTOR = 1.5  # salt only above this multiple of the
 
 def shuffle_partitions(df: DataFrame, default: int = 200) -> int:
     """The session's shuffle-partition count, with a sane fallback for
-    'auto'/unset — shared by the skew-salting paths here and in
-    textops so the reducer-share math and the explicit-count
-    repartition pins stay consistent."""
+    'auto'/unset — shared by ``hot_buckets`` and ``band_self_join`` so
+    the reducer-share math and the explicit-count repartition pins
+    stay consistent."""
     try:
         return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -212,64 +197,65 @@ def hot_buckets(
     )
 
 
-def _salted_band_candidates(
+def band_self_join(
     slim: DataFrame,
-    hot_bucket_threshold: int = ANN_HOT_BUCKET,
-    salt_g: int = ANN_SALT_G,
-    n_bands: int = N_BANDS,
-    band_bits: int = BAND_BITS,
+    id_col: str,
+    n_bands: int,
+    width: int,
+    directed: bool,
+    hot_bucket_threshold: int,
+    salt_g: int,
 ) -> DataFrame:
-    """Directed candidate pairs (qid, nid), qid != nid, from the banded
-    (vec_id, b, bk, allb) self-join — with the skew-aware hot-bucket
-    salting ported from ``textops.near_dup_pairs``.
-
-    Embedding tables at 100 TB are *more* skewed than text (boilerplate
-    images, zero vectors, template captions all collapse to identical
-    sign buckets), and the naive self-join sends every pair of a hot
-    bucket to one reducer — O(n_hot^2) on a single core.  Here a first
-    map-side-combinable count pass finds buckets above
-    ``hot_bucket_threshold``; only those rows replicate (left side x
-    ``salt_g`` partner groups, right side keeps its hash group ``g``),
-    so a hot bucket's pairs land on ``salt_g`` reducers.  Cold buckets
-    — the common case — join unsalted with zero replication.
+    """Candidate pairs (l, r) from the self-join of banded LSH rows
+    (``id_col``, allb, b, bk) on (b, bk): every ordered pair with
+    ``l != r`` when ``directed``, else every pair once with ``l < r``.
+    ``width`` is the length of one band key inside ``allb``.  Shared by
+    the embedding tier (``ann_lsh_topk``, ``embed_near_dup``) and the
+    text tier (``textops.near_dup_pairs``).
 
     A pair colliding in several bands is emitted exactly once, WITHOUT
     a pair-volume dedup shuffle: each row carries the full concatenated
     signature ``allb``, and the joined row survives only at the first
-    band where both sides agree (``_first_match_band``).  Branch
-    ownership is consistent — a collision's two rows share (b, bk), so
-    both sit in the same (hot or cold) branch, and the pair's first-
-    matching band decides which branch emits it.
+    band where both sides agree (``_first_match_band``).
 
-    Output pair SET is provably identical to the unsalted join: the
-    hot path enumerates each (qid, nid) exactly once (partner group
-    p == xxhash64(nid) % salt_g partitions the nid side).
-
-    Salting engages only for buckets that would actually STRAGGLE a
-    reducer: ``n > hot_bucket_threshold`` AND the bucket's pair volume
-    n^2 exceeds the mean per-reducer share of the total pair work
-    (sum of n_i^2 over all buckets / shuffle partitions).  The second,
-    relative condition is what keeps a uniformly-loaded table (every
-    bucket moderately sized, e.g. a corpus where EVERYTHING is
-    duplicated ~10x) on the unsalted plan — there the hash shuffle is
-    already balanced across reducers and replication is pure overhead
-    (measured 3-4x slower salted on the sf1 soak, where all 1024
-    band buckets hold ~80 rows each); a planted boilerplate block
-    whose single bucket dominates the pair work still trips both
-    conditions and spreads over ``salt_g`` reducers.
+    Skew: boilerplate rows (template text, zero vectors, identical
+    images) collapse into one bucket per band, and the plain self-join
+    sends all n^2 pairs of such a bucket to one reducer.  A first
+    map-side-combinable count pass (``hot_buckets``) finds the buckets
+    that would straggle; only their rows replicate (left side x
+    ``salt_g`` partner groups, right side keeps its hash group ``g``),
+    so a hot bucket's pairs land on ``salt_g`` reducers.  Cold buckets
+    join unsalted with zero replication.  Branch ownership is
+    consistent — a collision's two rows share (b, bk), so both sit in
+    the same (hot or cold) branch, and the pair's first-matching band
+    decides which branch emits it.  The hot path enumerates each pair
+    exactly once (partner group p == xxhash64(r) % salt_g partitions
+    the r side), so the output pair SET is identical to the unsalted
+    join.
     """
     first_b = _first_match_band(
-        F.col("a.allb"), F.col("c.allb"), n_bands, band_bits
+        F.col("a.allb"), F.col("c.allb"), n_bands, width
     )
-    # the band rows arrive already materialized by _band_rows (the
-    # 32-plane sign-bucket projection is a huge literal expression
-    # Janino can't compile into one method, so every plan reference
-    # would re-evaluate it interpreted) — a second checkpoint here
-    # would write the whole slim table to executor storage AGAIN just
-    # to add one cheap hash column; g recomputes per read instead
-    slim = slim.withColumn(
-        "g", F.pmod(F.xxhash64("vec_id"), F.lit(salt_g))
-    )
+    l, r = F.col(f"a.{id_col}"), F.col(f"c.{id_col}")
+    ordered = (l != r) if directed else (l < r)
+
+    def pairs(a: DataFrame, c: DataFrame, *extra_cond: "F.Column") -> DataFrame:
+        cond = (F.col("a.bk") == F.col("c.bk")) & (F.col("a.b") == F.col("c.b"))
+        for e in extra_cond:
+            cond = cond & e
+        return (
+            a.alias("a")
+            .join(c.alias("c"), cond & ordered)
+            .where(F.col("a.b") == first_b)
+            .select(l.alias("l"), r.alias("r"))
+        )
+
+    # the band rows arrive already materialized by the caller (both
+    # tiers' band keys are expensive projections: 32 plane dots, or
+    # the minhash pUDF) — a second checkpoint here would write the
+    # whole slim table to executor storage AGAIN just to add one cheap
+    # hash column; g recomputes per read instead
+    slim = slim.withColumn("g", F.pmod(F.xxhash64(id_col), F.lit(salt_g)))
     # eager emptiness check on the (tiny, aggregated) hot-bucket frame:
     # on the common unskewed path there are NO hot buckets, so the
     # two-branch salted plan would double whole-stage-codegen size for
@@ -279,41 +265,13 @@ def _salted_band_candidates(
     # checkpointed hot frame, so no work is duplicated either way.
     hot = hot_buckets(slim, hot_bucket_threshold).localCheckpoint()
     if not hot.take(1):
-        return (
-            slim.drop("g")
-            .alias("a")
-            .join(
-                slim.drop("g").alias("c"),
-                (F.col("a.b") == F.col("c.b"))
-                & (F.col("a.bk") == F.col("c.bk"))
-                & (F.col("a.vec_id") != F.col("c.vec_id")),
-            )
-            .where(F.col("a.b") == first_b)
-            .select(
-                F.col("a.vec_id").alias("qid"),
-                F.col("c.vec_id").alias("nid"),
-            )
-        )
+        return pairs(slim.drop("g"), slim.drop("g"))
     marked = slim.join(F.broadcast(hot), ["b", "bk"], "left")
     cold = marked.where(F.col("hot").isNull()).drop("hot", "g")
     hotr = marked.where(F.col("hot").isNotNull()).drop("hot")
-    cold_cand = (
-        cold.alias("a")
-        .join(
-            cold.alias("c"),
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.vec_id") != F.col("c.vec_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("c.vec_id").alias("nid"),
-        )
-    )
     # hot buckets: left replicates once per partner group p; the join
     # requires p == right.g so the shuffle key (b, bk, p) splits a hot
-    # bucket's directed pairs across salt_g reducers
+    # bucket's pairs across salt_g reducers.
     # explicit-count repartition on the join keys: AQE's partition
     # coalescing sizes by INPUT bytes, so it would merge the hot join's
     # few-MB band rows back into 1-2 tasks and the output-sized pair
@@ -323,28 +281,13 @@ def _salted_band_candidates(
     # from AQE coalescing; same trick BENCH.md documents for the
     # minhash pUDF stage.
     n_parts = shuffle_partitions(slim)
-    a = (
-        hotr.withColumn(
-            "p", F.explode(F.array(*[F.lit(i) for i in range(salt_g)]))
-        )
-        .repartition(n_parts, "b", "bk", "p")
-        .alias("a")
+    a = hotr.withColumn(
+        "p", F.explode(F.array(*[F.lit(i) for i in range(salt_g)]))
+    ).repartition(n_parts, "b", "bk", "p")
+    c = hotr.repartition(n_parts, "b", "bk", "g")
+    return pairs(cold, cold).unionByName(
+        pairs(a, c, F.col("a.p") == F.col("c.g"))
     )
-    hot_cand = (
-        a.join(
-            hotr.repartition(n_parts, "b", "bk", "g").alias("c"),
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.bk") == F.col("c.bk"))
-            & (F.col("a.p") == F.col("c.g"))
-            & (F.col("a.vec_id") != F.col("c.vec_id")),
-        )
-        .where(F.col("a.b") == first_b)
-        .select(
-            F.col("a.vec_id").alias("qid"),
-            F.col("c.vec_id").alias("nid"),
-        )
-    )
-    return cold_cand.unionByName(hot_cand)
 
 
 def lsh_planes(n_planes: int = N_PLANES) -> np.ndarray:
@@ -451,7 +394,7 @@ def ann_lsh_topk(
     Scale shape mirrors the near-dup LSH join: candidate generation
     shuffles only (vec_id, band, bucket) rows through the skew-aware
     salted self-join (hot buckets spread over ``salt_g`` reducers, see
-    ``_salted_band_candidates``); pairs dedup before the 64-dim scoring
+    ``band_self_join``); pairs dedup before the 64-dim scoring
     components re-attach once.  Recall floors are
     measured in tests/test_similarity_recall.py (>=0.9 on clustered
     corpora; the uniform-random table's analytic limit is documented
@@ -459,9 +402,9 @@ def ann_lsh_topk(
     """
     bands = _band_planes(n_bands, band_bits)
     slim = _band_rows(emb, bands)
-    cand = _salted_band_candidates(
-        slim, hot_bucket_threshold, salt_g, n_bands, band_bits
-    )
+    cand = band_self_join(
+        slim, "vec_id", n_bands, band_bits, True, hot_bucket_threshold, salt_g
+    ).toDF("qid", "nid")
     qc = _components(emb, "qid", "q")
     ec = _components(emb, "nid", "e")
     pairs = cand.join(qc, on="qid").join(ec, on="nid")
@@ -541,7 +484,7 @@ def embed_near_dup(
 
     Scale shape: identical to ``ann_lsh_topk`` — the self-join touches
     only slim (vec_id, band, bucket) rows through the skew-aware salted
-    form (``_salted_band_candidates``; hot buckets of boilerplate
+    form (``band_self_join``; hot buckets of boilerplate
     embeddings spread over ``salt_g`` reducers instead of one), pairs
     dedup before the 64-float components attach, and the final fold is
     a single map-side-combinable min/count agg on vec_id.  No cross
@@ -550,9 +493,9 @@ def embed_near_dup(
     """
     bands = _band_planes(n_bands, band_bits)
     slim = _band_rows(emb, bands)
-    cand = _salted_band_candidates(
-        slim, hot_bucket_threshold, salt_g, n_bands, band_bits
-    )
+    cand = band_self_join(
+        slim, "vec_id", n_bands, band_bits, True, hot_bucket_threshold, salt_g
+    ).toDF("qid", "nid")
     qc = _components(emb, "qid", "q")
     ec = _components(emb, "nid", "e")
     cos = F.expr(f"({_scalar_dot('q', 'e')})") / (F.col("qn") * F.col("en"))

@@ -11,10 +11,8 @@ keeps true containments.
 Scale notes:
 - Broadcast path: zero shuffle of the fact table; candidate explosion
   factor == number of distinct covering levels (typically 4-8).
-- Shuffle path (region side too big to broadcast): hash join on
-  (cell_id) with explicit salting for hot cells — replicate each
-  covering row SALT_K times, probe picks pmod(hash(key), SALT_K); plus
-  AQE skew-join as backstop.
+- Shuffle path (region side too big to broadcast): hash join on the
+  cell id; hot cells are left to AQE's skew join.
 """
 
 from __future__ import annotations
@@ -85,21 +83,20 @@ def cap_refine_predicate(
 
 
 BROADCAST_COVERING_LIMIT = 100_000  # rows; ~a few MB broadcast
-HOT_CELL_SALT_THRESHOLD = 16        # max regions sharing one cell
 
 
-def _resolve_plan(cov_pdf, broadcast, salt_k):
-    """Size-based brute-vs-indexed switch (the S2ClosestEdgeQueryBase
-    cost-model analogue for the covering join): broadcast while the
-    covering table is dim-sized; on the shuffle path, salt
-    automatically when some covering cell is shared by many regions."""
+def _candidate_join(
+    probe: DataFrame, cov: DataFrame, n_cov: int, broadcast: bool | str
+) -> DataFrame:
+    """Probe ancestor cells equi-joined to the covering cells.  Size-
+    based brute-vs-indexed switch (the S2ClosestEdgeQueryBase cost-model
+    analogue for the covering join): ``broadcast="auto"`` broadcasts the
+    ``n_cov``-row covering table while it is dim-sized and shuffles
+    both sides otherwise."""
     if broadcast == "auto":
-        broadcast = len(cov_pdf) <= BROADCAST_COVERING_LIMIT
-    if not broadcast and salt_k == 0:
-        hot = int(cov_pdf.groupby("cell_id").size().max()) if len(cov_pdf) else 0
-        if hot >= HOT_CELL_SALT_THRESHOLD:
-            salt_k = 8
-    return broadcast, salt_k
+        broadcast = n_cov <= BROADCAST_COVERING_LIMIT
+    right = F.broadcast(cov) if broadcast else cov
+    return probe.join(right, probe["anc_cell"] == right["cov_cell"], "inner")
 
 
 def point_in_cap_join(
@@ -108,7 +105,6 @@ def point_in_cap_join(
     caps: list[tuple[object, Cap]],
     options: CovererOptions | None = None,
     broadcast: bool | str = "auto",
-    salt_k: int = 0,
     point_key: str = "key",
 ) -> DataFrame:
     """Join points (with x,y,z and cell_id columns) to containing caps.
@@ -116,7 +112,7 @@ def point_in_cap_join(
     Returns (point_key, region_id) pairs, exactly the brute-force
     result set (refine predicate is bit-identical arithmetic).
     ``broadcast="auto"`` picks the broadcast plan for dim-sized
-    coverings and the salted shuffle plan otherwise.
+    coverings and the shuffle plan otherwise.
     """
     import pandas as pd
 
@@ -128,7 +124,6 @@ def point_in_cap_join(
         columns=["region_id", "cx", "cy", "cz", "r2"],
     )
     cov_rows = COV.build_covering_rows(caps, options)
-    broadcast, salt_k = _resolve_plan(cov_rows, broadcast, salt_k)
     # reuse the rows already built for plan resolution — covering_df
     # would re-run the full RegionCoverer search per cap on the driver
     pdf = cov_rows.merge(extra, on="region_id", how="left")
@@ -136,21 +131,7 @@ def point_in_cap_join(
     levels = COV.covering_levels(cov_rows)
     probe = explode_ancestors(normalized_cols(points), levels)
     cov = cov.withColumnRenamed("cell_id", "cov_cell")
-    if salt_k and not broadcast:
-        # replicate region rows K times; probe picks one salt bucket
-        cov = cov.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
-        )
-        probe = probe.withColumn(
-            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
-        )
-        join_cond = (F.col("anc_cell") == F.col("cov_cell")) & (
-            probe["salt"] == cov["salt"]
-        )
-        joined = probe.join(cov, on=join_cond, how="inner")
-    else:
-        right = F.broadcast(cov) if broadcast else cov
-        joined = probe.join(right, probe["anc_cell"] == right["cov_cell"], "inner")
+    joined = _candidate_join(probe, cov, len(cov_rows), broadcast)
     refined = joined.where(
         cap_refine_predicate(
             F.col("ux"), F.col("uy"), F.col("uz"),
@@ -169,7 +150,6 @@ def point_in_loop_join(
     options: CovererOptions | None = None,
     broadcast: bool | str = "auto",
     skip_interior: bool = False,
-    salt_k: int = 0,
     point_key: str = "key",
 ) -> DataFrame:
     """Join points (x,y,z + cell_id columns) to containing loop regions.
@@ -188,31 +168,12 @@ def point_in_loop_join(
     from ..functions import udfs as U
 
     cov_pdf = COV.build_covering_rows(loops, options)
-    broadcast, salt_k = _resolve_plan(cov_pdf, broadcast, salt_k)
     levels = COV.covering_levels(cov_pdf)
     cov = spark.createDataFrame(
         cov_pdf, schema=COV._schema_of(cov_pdf, loops)
     ).withColumnRenamed("cell_id", "cov_cell")
     probe = explode_ancestors(points, levels)
-    if salt_k and not broadcast:
-        # hot covering cells (urban tiles): replicate covering rows K
-        # times, probe picks one salt bucket — the shuffle join spreads
-        # a hot cell over K reducers (SURVEY.md §4 skew row).
-        cov = cov.withColumn(
-            "salt", F.explode(F.array(*[F.lit(i) for i in range(salt_k)]))
-        )
-        probe = probe.withColumn(
-            "salt", F.pmod(F.hash(F.col(point_key)), F.lit(salt_k))
-        )
-        joined = probe.join(
-            cov,
-            (probe["anc_cell"] == cov["cov_cell"])
-            & (probe["salt"] == cov["salt"]),
-            "inner",
-        )
-    else:
-        right = F.broadcast(cov) if broadcast else cov
-        joined = probe.join(right, probe["anc_cell"] == right["cov_cell"], "inner")
+    joined = _candidate_join(probe, cov, len(cov_pdf), broadcast)
     loops_by_id = {
         rid: (rg.edges, rg.origin_inside) for rid, rg in loops
     }

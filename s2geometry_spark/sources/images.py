@@ -10,13 +10,11 @@ invariants (decoded pixels allclose / PSNR>=40dB, caption byte-equal,
 phash unchanged) after any shuffle/join.
 
 Geotags: 80% uniform-ish over the sphere, 20% clustered around 8
-fixed hot spots (FIXTURES.md §1) to exercise skew/salting in the
+fixed hot spots (FIXTURES.md §1) to exercise skew in the
 covering-term join.
 """
 
 from __future__ import annotations
-
-import zlib
 
 import numpy as np
 import pandas as pd
@@ -206,13 +204,6 @@ def geo_table(spark: SparkSession, n: int, partitions: int = 0) -> DataFrame:
             )
 
     return base.mapInPandas(gen, schema=GEO_SCHEMA)
-
-
-def expected_pixels(i: int) -> np.ndarray:
-    """Oracle: the decoded pixels row i must reproduce (exact for png,
-    quantized for the fake-jpeg stub)."""
-    rec = row_record(i)
-    return PNG.decode_image(rec["bytes"], rec["fmt"])
 
 
 def phash_table(spark: SparkSession, n: int, partitions: int = 0) -> DataFrame:

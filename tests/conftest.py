@@ -26,6 +26,16 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Size-based broadcast off for one test, so a join without an
+    explicit broadcast hint really shuffles both sides."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

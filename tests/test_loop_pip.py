@@ -176,19 +176,19 @@ class TestLoopJoin:
         assert got == sorted(want)
         assert len(got) > 0
 
-    def test_salted_shuffle_path_same_result(self, spark, pts_df):
+    def test_shuffle_path_same_result(self, spark, pts_df, no_auto_broadcast):
         loops = R.synthetic_loops(range(12))
         base = sorted(
             (r["key"], r["region_id"])
             for r in SJ.point_in_loop_join(spark, pts_df, loops).collect()
         )
-        salted = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_loop_join(
-                spark, pts_df, loops, broadcast=False, salt_k=4
-            ).collect()
+        shuffle_df = SJ.point_in_loop_join(spark, pts_df, loops, broadcast=False)
+        plan = shuffle_df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        shuffled = sorted(
+            (r["key"], r["region_id"]) for r in shuffle_df.collect()
         )
-        assert base == salted
+        assert base == shuffled
 
     def test_interior_skip_same_result(self, spark, pts_df):
         loops = R.synthetic_loops(range(12))

@@ -2,8 +2,8 @@
 (hundreds of identical embeddings sharing every sign band) must engage
 the partner-group salting, spread the hot bucket's pair volume over
 ``salt_g`` reducer keys, and produce the exact same pair set as the
-unsalted join.  Ports the textops skew guarantees (near_dup_pairs,
-textops.py:409-449) to ``similarity._salted_band_candidates``."""
+unsalted join.  Exercises ``similarity.band_self_join``, the band
+self-join primitive shared with ``textops.near_dup_pairs``."""
 
 from __future__ import annotations
 
@@ -29,24 +29,32 @@ def _emb_df(spark, n_same: int, n_rand: int):
     )
 
 
+def _cand(slim, hot_bucket_threshold=16, salt_g=8, directed=True):
+    return SIM.band_self_join(
+        slim, "vec_id", SIM.N_BANDS, SIM.BAND_BITS, directed,
+        hot_bucket_threshold, salt_g,
+    )
+
+
 def test_hot_bucket_salting_preserves_pair_set(spark):
-    """Salted (salt_g=8) and unsalted (threshold so high nothing is
-    hot) candidate generation produce identical directed pair sets on
-    a corpus with one planted hot bucket."""
+    """For both pair forms (directed l != r, undirected l < r), salted
+    (salt_g=8) and unsalted (threshold so high nothing is hot)
+    candidate generation produce identical pair sets on a corpus with
+    one planted hot bucket; the undirected set is exactly the directed
+    set filtered to l < r."""
     emb = _emb_df(spark, n_same=120, n_rand=40)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    salted = SIM._salted_band_candidates(
-        slim, hot_bucket_threshold=16, salt_g=8
-    )
-    unsalted = SIM._salted_band_candidates(
-        slim, hot_bucket_threshold=10**9, salt_g=8
-    )
-    got = sorted(tuple(r) for r in salted.collect())
-    want = sorted(tuple(r) for r in unsalted.collect())
-    assert got == want
+    got = {}
+    for directed in (True, False):
+        salted = _cand(slim, 16, 8, directed)
+        unsalted = _cand(slim, 10**9, 8, directed)
+        got[directed] = sorted(tuple(r) for r in salted.collect())
+        want = sorted(tuple(r) for r in unsalted.collect())
+        assert got[directed] == want, directed
+    assert got[False] == [(a, b) for a, b in got[True] if a < b]
     # the planted clone block collides in every band -> 120*119 pairs
-    n_same_pairs = sum(1 for a, b in got if a < 120 and b < 120)
+    n_same_pairs = sum(1 for a, b in got[True] if a < 120 and b < 120)
     assert n_same_pairs == 120 * 119
 
 
@@ -134,12 +142,12 @@ def test_unskewed_corpus_compiles_one_branch_plan(spark):
     emb = _emb_df(spark, n_same=1, n_rand=60)
     bands = SIM._band_planes(SIM.N_BANDS, SIM.BAND_BITS)
     slim = SIM._band_rows(emb, bands)
-    cand = SIM._salted_band_candidates(slim, hot_bucket_threshold=16)
+    cand = _cand(slim)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "explode" not in plan and "Union" not in plan
 
     hot_emb = _emb_df(spark, n_same=120, n_rand=10)
     hot_slim = SIM._band_rows(hot_emb, bands)
-    hot_cand = SIM._salted_band_candidates(hot_slim, hot_bucket_threshold=16)
+    hot_cand = _cand(hot_slim)
     hot_plan = hot_cand._jdf.queryExecution().executedPlan().toString()
     assert "explode" in hot_plan and "Union" in hot_plan

@@ -1,9 +1,10 @@
 """The planted-skew fixture (jobs/gen_sf_scale.py --skew) and the
-salted-vs-unsalted invariant it exists to demonstrate: flipping the
-salting knob changes the PLAN (hot keys spread over salt partitions),
-never the RESULT.  bench.py --skew asserts count equality at full
-size; these tests assert full row-set equality at miniature size,
-through the same parquet fixture path the bench reads."""
+plan-vs-result invariant it exists to demonstrate: flipping a plan
+knob (LSH hot-bucket salting, broadcast vs shuffle covering join)
+changes the PLAN, never the RESULT.  bench.py --skew asserts count
+equality at full size; these tests assert full row-set equality at
+miniature size, through the same parquet fixture path the bench
+reads."""
 
 from __future__ import annotations
 
@@ -51,7 +52,7 @@ def test_generator_deterministic_and_hot_fractions(skew_dir, tmp_path):
     assert n_text == 1
 
 
-def test_pip_salted_equals_unsalted_rows(spark, skew_dir):
+def test_pip_broadcast_equals_shuffle_rows(spark, skew_dir, no_auto_broadcast):
     from s2geometry_spark.kernels.geom import Cap
     from s2geometry_spark.operators import spatial_join as SJ
     from s2geometry_spark.operators import tile as T
@@ -63,10 +64,12 @@ def test_pip_salted_equals_unsalted_rows(spark, skew_dir):
     caps = R.synthetic_caps(range(1, 25)) + [
         (METRO_REGION_ID, Cap(metro_center(), 1e-6))
     ]
-    salted = SJ.point_in_cap_join(spark, pts, caps, broadcast=False, salt_k=8)
-    unsalted = SJ.point_in_cap_join(spark, pts, caps, broadcast=False, salt_k=0)
-    got = sorted(tuple(r) for r in salted.collect())
-    want = sorted(tuple(r) for r in unsalted.collect())
+    shuffled = SJ.point_in_cap_join(spark, pts, caps, broadcast=False)
+    plan = shuffled._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan
+    broadcast = SJ.point_in_cap_join(spark, pts, caps, broadcast=True)
+    got = sorted(tuple(r) for r in shuffled.collect())
+    want = sorted(tuple(r) for r in broadcast.collect())
     assert got == want
     # every metro point lands in the metro cap: the hot key is real
     n_metro = sum(1 for _, rid in got if rid == METRO_REGION_ID)
@@ -90,8 +93,13 @@ def test_embedding_hot_bucket_engages_and_matches(spark, skew_dir):
         .count()
     )
     assert hot_n >= SIM.N_BANDS  # one hot bucket per band
-    salted = SIM._salted_band_candidates(slim, SIM.ANN_HOT_BUCKET, 8)
-    unsalted = SIM._salted_band_candidates(slim, 2**31, 8)
+
+    def cand(threshold):
+        return SIM.band_self_join(
+            slim, "vec_id", SIM.N_BANDS, SIM.BAND_BITS, True, threshold, 8
+        )
+
+    salted, unsalted = cand(SIM.ANN_HOT_BUCKET), cand(2**31)
     got = sorted(tuple(r) for r in salted.collect())
     assert got == sorted(tuple(r) for r in unsalted.collect())
     hot = SIZES["hot_emb"]

@@ -53,19 +53,19 @@ class TestCapJoin:
         assert got == want
         assert len(got) > 0
 
-    def test_salted_shuffle_path_same_result(self, spark, pts_df, pts_np):
+    def test_shuffle_path_same_result(self, spark, pts_df, no_auto_broadcast):
         caps = R.synthetic_caps(range(12))
         broadcast = sorted(
             (r["key"], r["region_id"])
             for r in SJ.point_in_cap_join(spark, pts_df, caps).collect()
         )
-        salted = sorted(
-            (r["key"], r["region_id"])
-            for r in SJ.point_in_cap_join(
-                spark, pts_df, caps, broadcast=False, salt_k=4
-            ).collect()
+        shuffle_df = SJ.point_in_cap_join(spark, pts_df, caps, broadcast=False)
+        plan = shuffle_df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        shuffled = sorted(
+            (r["key"], r["region_id"]) for r in shuffle_df.collect()
         )
-        assert broadcast == salted
+        assert broadcast == shuffled
 
     def test_semi_and_anti(self, spark, pts_df):
         caps = R.synthetic_caps(range(12))
